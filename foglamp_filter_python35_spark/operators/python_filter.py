@@ -5,10 +5,12 @@ of readings into a Python list-of-dicts, invoke a user function on it,
 validate + rebuild the result (``plugin.cpp:255-260``, ``:284-287``).
 This module reproduces that contract on Spark:
 
-* execution is Arrow-batched ``mapInPandas`` — the generalization of the
-  reference's one performance idea (one Python call per batch, never per
-  row, ``plugin.cpp:284-287``), but parallel per executor instead of
-  serialized behind a process-global GIL (``plugin.cpp:141-163``);
+* execution is ``mapInArrow`` — the generalization of the reference's
+  one performance idea (one Python call per batch, never per row,
+  ``plugin.cpp:284-287``), but parallel per executor instead of
+  serialized behind a process-global GIL (``plugin.cpp:141-163``).  The
+  wire is built straight from the Arrow ``RecordBatch`` columns and the
+  result straight back into one, with no pandas frame on either side;
 * the user function sees the reference wire shape
   (``python35_filter.cpp:35-119``; documented ``readings35.py:39-51``)::
 
@@ -43,8 +45,9 @@ This module reproduces that contract on Spark:
   564-615``); failure aborts plan construction, mirroring plugin_init
   returning NULL (``plugin.cpp:213-214``).
 
-Timestamps cross this wire as integer epoch seconds, exactly the
-granularity the reference marshals (``python35_filter.cpp:98-103``).
+Timestamps cross this wire as integer epoch seconds (UTC, floored),
+exactly the granularity the reference marshals
+(``python35_filter.cpp:98-103``).
 """
 
 from __future__ import annotations
@@ -52,13 +55,16 @@ from __future__ import annotations
 import datetime as _dt
 import json
 from collections.abc import Callable, Iterator
+from itertools import islice
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from foglamp_filter_python35_spark.config import FilterConfig
-from foglamp_filter_python35_spark.datamodel import READING_SCHEMA
+from foglamp_filter_python35_spark.datamodel import READING_COLUMNS, READING_SCHEMA
 
 Wire = list[dict]
 FilterFn = Callable[[Wire], Wire]
@@ -71,7 +77,7 @@ class BatchReject(Exception):
     """Raised when a returned batch violates the type/shape contract."""
 
 
-# Skip the pre-mapInPandas spreading shuffle below this optimizer size
+# Skip the pre-mapInArrow spreading shuffle below this optimizer size
 # estimate: for small inputs the shuffle's fixed cost exceeds the serial
 # processing it would save (the reference processes one batch per call on
 # one thread, plugin.cpp:284-287 — small batches are its home turf).
@@ -191,88 +197,125 @@ def run_python_filter(
             except AttributeError:
                 pass  # non-function callable without settable attrs
 
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def runner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             try:
-                wire = _to_wire(pdf, compat_bytes)
-                result = fn(wire)
-                out = _from_wire(result)
+                out = _from_wire(fn(_to_wire(batch, compat_bytes)))
             except Exception:
                 # any failure => forward the input batch unmodified
-                # (plugin.cpp:295-310, :338-342)
-                yield pdf
+                # (plugin.cpp:295-310, :338-342); the projection below
+                # makes it match the declared schema column for column
+                yield batch
                 continue
             yield out
 
-    return df.mapInPandas(runner, READING_SCHEMA)
+    return df.select(*READING_COLUMNS).mapInArrow(runner, READING_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# wire codecs
+# wire codecs: Arrow RecordBatch <-> the reference's list-of-dicts
 # ---------------------------------------------------------------------------
 
-
-def _as_mapping(v) -> dict:
-    """Arrow hands MapType to pandas as dict or list-of-(k,v) tuples."""
-    if v is None:
-        return {}
-    if isinstance(v, dict):
-        return v
-    return dict(v)
+#: Arrow twin of READING_SCHEMA, the type of every batch ``_from_wire``
+#: builds (timestamps as UTC epoch micros, which the JVM reads back
+#: whatever the session time zone).
+_WIRE_ARROW_SCHEMA = to_arrow_schema(READING_SCHEMA)
 
 
-def _to_wire(pdf: pd.DataFrame, compat_bytes: bool) -> Wire:
-    # vectorize the metadata columns once per batch; only the payload
-    # dicts need per-row Python
-    ids = pdf["id"].to_numpy(dtype="object")
-    assets = pdf["asset_code"].to_numpy(dtype="object")
-    ts_s = (pdf["ts"].astype("datetime64[s]").astype("int64")).to_numpy()
-    ts_null = pdf["ts"].isna().to_numpy()
-    uts_s = (pdf["user_ts"].astype("datetime64[s]").astype("int64")).to_numpy()
-    uts_null = pdf["user_ts"].isna().to_numpy()
+def _values(arr: pa.Array) -> tuple[list, list | None]:
+    """Python values of a primitive column plus its validity mask (None
+    when the column has no nulls).  Numeric nulls are filled before the
+    numpy hop, so an int64 column never round-trips through float64 and
+    a null double never reads as NaN."""
+    if not arr.null_count:
+        return arr.to_numpy(zero_copy_only=False).tolist(), None
+    valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+    if pa.types.is_integer(arr.type) or pa.types.is_floating(arr.type):
+        arr = arr.fill_null(0)
+    return arr.to_numpy(zero_copy_only=False).tolist(), valid
 
-    ids_null = pdf["id"].isna().to_numpy()
-    rmaps = pdf["reading"].to_numpy(dtype="object")
-    smaps = pdf["reading_str"].to_numpy(dtype="object")
 
-    out: Wire = []
-    for i in range(len(pdf)):
-        reading: dict = {}
-        for k, v in _as_mapping(rmaps[i]).items():
-            if v is not None:
-                reading[k] = v
-        for k, v in _as_mapping(smaps[i]).items():
-            if v is not None:
-                reading[k] = v
-        if compat_bytes:
-            reading = {
-                (k.encode() if isinstance(k, str) else k): (
-                    v.encode() if isinstance(v, str) else v
-                )
-                for k, v in reading.items()
-            }
-        asset = assets[i]
-        if compat_bytes and isinstance(asset, str):
-            asset = asset.encode()
-        rec = {"asset_code": asset, "reading": reading}
-        if not ids_null[i]:
-            rec["id"] = int(ids[i])
-        if not ts_null[i]:
-            rec["ts"] = int(ts_s[i])
-        if not uts_null[i]:
-            rec["user_ts"] = int(uts_s[i])
-        out.append(rec)
+def _epoch_seconds(arr: pa.Array) -> tuple[list, list | None]:
+    """Whole epoch seconds of a timestamp[us] column, floored
+    (-1.5 s -> -2), with its validity mask as in ``_values``."""
+    micros = arr.cast(pa.int64())
+    valid = None
+    if micros.null_count:
+        valid = micros.is_valid().to_numpy(zero_copy_only=False).tolist()
+        micros = micros.fill_null(0)
+    secs = np.floor_divide(micros.to_numpy(), 1_000_000)
+    return secs.tolist(), valid
+
+
+def _maps(arr: pa.MapArray, encode: bool) -> list[dict]:
+    """One dict per row of a map column.  The flat ``keys``/``items``
+    children are decoded ONCE and cut into rows by ``offsets`` (which
+    index the unsliced children, so a sliced batch reads only its own
+    range); a null map reads as ``{}`` and a datapoint with a null value
+    is left off the wire."""
+    offs = arr.offsets.to_numpy()
+    lo, hi = int(offs[0]), int(offs[-1])
+    if lo == hi:
+        return [{} for _ in range(len(arr))]
+    items = arr.items.slice(lo, hi - lo)
+    keys = arr.keys.slice(lo, hi - lo).to_numpy(zero_copy_only=False).tolist()
+    vals, valid = _values(items)
+    if encode:
+        keys = [k.encode() for k in keys]
+        if not pa.types.is_floating(items.type):
+            vals = [v if v is None else v.encode() for v in vals]
+    counts = np.diff(offs).tolist()
+    if valid is None:
+        pairs = zip(keys, vals)
+        out = [dict(islice(pairs, c)) for c in counts]
+    else:
+        triples = zip(keys, vals, valid)
+        out = [{k: v for k, v, ok in islice(triples, c) if ok} for c in counts]
+    if arr.null_count:
+        for i in np.flatnonzero(arr.is_null().to_numpy(zero_copy_only=False)):
+            out[i] = {}
     return out
 
 
-def _from_wire(result: Wire) -> pd.DataFrame:
+def _to_wire(batch: pa.RecordBatch, compat_bytes: bool) -> Wire:
+    assets = batch.column("asset_code").to_numpy(zero_copy_only=False).tolist()
+    if compat_bytes:
+        assets = [a.encode() if isinstance(a, str) else a for a in assets]
+    readings = _maps(batch.column("reading"), compat_bytes)
+    # the wire has one datapoint bag per reading: on a key clash the
+    # string datapoint wins
+    for reading, strs in zip(
+        readings, _maps(batch.column("reading_str"), compat_bytes)
+    ):
+        if strs:
+            reading.update(strs)
+    out: Wire = [
+        {"asset_code": a, "reading": r} for a, r in zip(assets, readings)
+    ]
+    # id/ts/user_ts are on the wire only when non-null
+    for name, (vals, valid) in (
+        ("id", _values(batch.column("id"))),
+        ("ts", _epoch_seconds(batch.column("ts"))),
+        ("user_ts", _epoch_seconds(batch.column("user_ts"))),
+    ):
+        if valid is None:
+            for rec, v in zip(out, vals):
+                rec[name] = v
+        else:
+            for rec, v, ok in zip(out, vals, valid):
+                if ok:
+                    rec[name] = v
+    return out
+
+
+def _from_wire(result: Wire) -> pa.RecordBatch:
     if not isinstance(result, (list, tuple)):
         raise BatchReject("filter must return a list of reading dicts")
-    ids, assets, tss, user_tss, readings, readings_str = [], [], [], [], [], []
+    ids, assets, tss, user_tss = [], [], [], []
+    num_keys, num_vals, num_offs = [], [], [0]
+    str_keys, str_vals, str_offs = [], [], [0]
     # T7 default for absent metadata: "new readings have new timestamps"
-    # — one micros-precision stamp per batch, appended as int64 so the
-    # column builds vectorized (a per-row pd.Timestamp costs ~1 µs/row,
-    # measurable at 1 M rows)
+    # — one micros-precision stamp per batch.
     # .timestamp() must run on the AWARE datetime: a naive datetime is
     # interpreted in the host's local timezone, shifting the stamp by the
     # UTC offset on any non-UTC host
@@ -288,6 +331,9 @@ def _from_wire(result: Wire) -> pd.DataFrame:
         num: dict[str, float] = {}
         strs: dict[str, str] = {}
         for k, v in payload.items():
+            if type(k) is str and type(v) is float:  # the common datapoint
+                num[k] = v
+                continue
             key = k.decode() if isinstance(k, bytes) else k
             if not isinstance(key, str):
                 raise BatchReject(f"datapoint key {key!r} is not a string")
@@ -312,29 +358,33 @@ def _from_wire(result: Wire) -> pd.DataFrame:
             asset = asset.decode()
         ids.append(int(rec["id"]) if "id" in rec else None)
         assets.append(asset)
-        tss.append(
-            int(rec["ts"]) * 1_000_000 if "ts" in rec else now_us
-        )
+        tss.append(int(rec["ts"]) * 1_000_000 if "ts" in rec else now_us)
         user_tss.append(
             int(rec["user_ts"]) * 1_000_000 if "user_ts" in rec else now_us
         )
-        readings.append(num)
-        readings_str.append(strs)
-    import numpy as np  # noqa: PLC0415
-
-    # object dtype is required even when empty — pandas would otherwise
-    # default empty columns to float64, which Arrow cannot map-convert
-    return pd.DataFrame(
-        {
-            "id": pd.array(ids, dtype="Int64"),
-            "asset_code": pd.Series(assets, dtype="object"),
-            "ts": pd.Series(
-                np.asarray(tss, dtype="int64").view("datetime64[us]")
+        num_keys.extend(num)
+        num_vals.extend(num.values())
+        num_offs.append(len(num_keys))
+        str_keys.extend(strs)
+        str_vals.extend(strs.values())
+        str_offs.append(len(str_keys))
+    ts_type = _WIRE_ARROW_SCHEMA.field("ts").type
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids, pa.int64()),
+            pa.array(assets, pa.string()),
+            pa.array(tss, ts_type),
+            pa.array(user_tss, ts_type),
+            pa.MapArray.from_arrays(
+                pa.array(num_offs, pa.int32()),
+                pa.array(num_keys, pa.string()),
+                pa.array(num_vals, pa.float64()),
             ),
-            "user_ts": pd.Series(
-                np.asarray(user_tss, dtype="int64").view("datetime64[us]")
+            pa.MapArray.from_arrays(
+                pa.array(str_offs, pa.int32()),
+                pa.array(str_keys, pa.string()),
+                pa.array(str_vals, pa.string()),
             ),
-            "reading": pd.Series(readings, dtype="object"),
-            "reading_str": pd.Series(readings_str, dtype="object"),
-        }
+        ],
+        schema=_WIRE_ARROW_SCHEMA,
     )

@@ -14,9 +14,10 @@ Spark mapping:
 * S2 output  -> ``writeStream.foreachBatch(sink)``; intra-query chaining
   is DataFrame composition (``registry.apply_pipeline``).
 * S3 degraded behavior -> the foreachBatch wrapper catches any transform
-  failure and forwards the INPUT batch to the sink unmodified —
-  at-least-the-input delivery, never loss by crash
-  (``plugin.cpp:268-282``, ``:295-310``, ``:338-342``).
+  failure (at build time, or raised lazily inside the sink's write) and
+  forwards the INPUT batch to the sink unmodified — at-least-the-input
+  delivery, never loss by crash (``plugin.cpp:268-282``, ``:295-310``,
+  ``:338-342``).  Each fallback logs one WARNING.
 * C3 reconfigure -> stop + rebuild + restart from checkpoint (exactly-once
   resumption replaces the reference's config mutex,
   ``python35_filter.cpp:310-436``).
@@ -28,6 +29,7 @@ Spark mapping:
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from typing import Any
 
@@ -48,7 +50,16 @@ from pyspark.sql.types import (
 
 from foglamp_filter_python35_spark.registry import Stage, apply_pipeline
 
+#: ``sink(df, epoch_id)``: lands one micro-batch.  ``df`` is the LAZY
+#: output of the filter chain, so the sink's own action runs the
+#: transform.  The sink must be all-or-nothing per call: when it raises,
+#: nothing it was given may be visible downstream, because the pipeline
+#: may then hand it the unfiltered input for the same epoch (S3).  A
+#: sink that runs more than one action on ``df`` should ``persist`` it
+#: first, or each action re-runs the transform.
 SinkFn = Callable[[DataFrame, int], None]
+
+_log = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
@@ -116,6 +127,15 @@ def run_micro_batch_pipeline(
     """Wire source -> filter chain -> sink with the reference's degraded
     behavior: a failing transform forwards the input batch unchanged.
 
+    One Spark job per micro-batch: ``sink`` receives the lazy output of
+    ``stages`` and its own write runs them, so it must be all-or-nothing
+    per call (see ``SinkFn``; ``snapshot_sink`` is — its data files stay
+    invisible until the manifest link).  If the sink raises, the output
+    is forced alone into a ``noop`` write: if that fails too, the
+    transform is at fault and the input batch goes to the sink instead
+    (S3, logged as one WARNING on this module's logger); otherwise the
+    sink's error fails the query and no unfiltered data is forwarded.
+
     Lineage (S6): by default the input stream carries an ``observe``
     named ``lineage`` — per-batch row/asset counts ride
     ``StreamingQueryProgress.observedMetrics[lineage]`` at zero extra
@@ -124,6 +144,18 @@ def run_micro_batch_pipeline(
     collect-based debug path (see ``AssetTracker``)."""
     if lineage:
         stream = observe_readings(stream, lineage)
+
+    def fall_back(batch_df: DataFrame, epoch_id: int, exc: Exception) -> None:
+        # S3: error => pass the input through (plugin.cpp:295-310)
+        _log.warning(
+            "S3 fallback: query %r epoch %d forwards its input unfiltered "
+            "after %s: %s",
+            query_name,
+            epoch_id,
+            type(exc).__name__,
+            str(exc).partition("\n")[0],
+        )
+        sink(batch_df, epoch_id)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         from foglamp_filter_python35_spark.operators.python_filter import (  # noqa: PLC0415
@@ -134,29 +166,28 @@ def run_micro_batch_pipeline(
             tracker.record(query_name, "in", batch_df)
         try:
             out = apply_pipeline(batch_df, stages)
-            # force evaluation inside the try so transform errors
-            # (including ones raised lazily inside Python workers) hit
-            # the fallback BEFORE the sink sees any rows.  Eager
-            # localCheckpoint materializes in ONE job with no aggregate
-            # stage and no cache-manager pass — the round-7 A/B at the
-            # 50x1k latency shape measured the persist()+count() form
-            # at 3.1k rows/s vs 5.1k for this (the no-forcing bound is
-            # 5.6k: the residual floor is checkpoint commit + source
-            # listing, not forcing).  The checkpointed blocks are freed
-            # by the ContextCleaner when the batch's DataFrame is
-            # GC'd — one micro-batch of blocks in flight, same bound
-            # the explicit unpersist gave the cached form.
-            out = out.localCheckpoint(eager=True)
         except FilterSetupError:
             # misconfigured stage: fail the QUERY (plugin_init
             # returning NULL) — falling back here would silently
             # forward unfiltered data every micro-batch
             raise
-        except Exception:
-            # S3: error => pass the input through (plugin.cpp:295-310)
-            sink(batch_df, epoch_id)
+        except Exception as exc:
+            fall_back(batch_df, epoch_id, exc)
             return
-        sink(out, epoch_id)
+        # the sink's own write runs the transform; being all-or-nothing,
+        # a sink that raised has forwarded nothing
+        try:
+            sink(out, epoch_id)
+        except Exception as sink_exc:
+            # whose fault?  Force the transform alone, with no output
+            try:
+                out.write.format("noop").mode("overwrite").save()
+            except Exception as exc:
+                fall_back(batch_df, epoch_id, exc)
+                return
+            # the transform is sound, so the sink itself failed: fail
+            # the query rather than forward unfiltered data
+            raise sink_exc
 
     writer = (
         stream.writeStream.foreachBatch(process)

@@ -181,12 +181,78 @@ def test_compat_bytes_wire(spark):
         assert r["reading"]["keys_were_bytes"] == 1.0
 
     # and the codec itself round-trips bytes keys/values
-    pdf = df.limit(1).toPandas()
+    batch = df.limit(1).toArrow().combine_chunks().to_batches()[0]
     from foglamp_filter_python35_spark.operators.python_filter import _to_wire
 
-    wire = _to_wire(pdf, compat_bytes=True)
+    wire = _to_wire(batch, compat_bytes=True)
     assert isinstance(wire[0]["asset_code"], bytes)
     assert all(isinstance(k, bytes) for k in wire[0]["reading"])
+
+
+def test_wire_codec_edge_cases():
+    """The Arrow codec's wire for hostile rows, written out literally (the
+    values the earlier pandas codec produced for the same rows): null
+    metadata is omitted, a null map reads as {}, a null map value is
+    dropped, NaN is kept, timestamps floor to whole seconds, a string
+    datapoint wins a key clash with a numeric one, and a sliced batch
+    reads only its own rows."""
+    import math
+
+    import pyarrow as pa
+
+    from foglamp_filter_python35_spark.operators.python_filter import (
+        _WIRE_ARROW_SCHEMA,
+        _from_wire,
+        _to_wire,
+    )
+
+    batch = pa.RecordBatch.from_pylist(
+        [
+            dict(id=None, asset_code="a", ts=None, user_ts=None,
+                 reading=[("x", 1.5)], reading_str=[]),
+            dict(id=2, asset_code="b", ts=-1_500_000, user_ts=1_250_000,
+                 reading=None, reading_str=[("u", "C")]),
+            dict(id=3, asset_code="c", ts=1_700_000_000_999_999,
+                 user_ts=1_699_999_999_000_000,
+                 reading=[("n", float("nan")), ("z", None), ("k", 2.0)],
+                 reading_str=[("k", "str"), ("s", None)]),
+        ],
+        schema=_WIRE_ARROW_SCHEMA,
+    )
+
+    def split_nan(wire):
+        # NaN != NaN, so the kept NaN is checked apart from the literal
+        nan = wire[2]["reading"].pop(next(iter(wire[2]["reading"])))
+        assert math.isnan(nan)
+        return wire
+
+    assert split_nan(_to_wire(batch, compat_bytes=False)) == [
+        {"asset_code": "a", "reading": {"x": 1.5}},
+        {"asset_code": "b", "reading": {"u": "C"},
+         "id": 2, "ts": -2, "user_ts": 1},
+        {"asset_code": "c", "reading": {"k": "str"},
+         "id": 3, "ts": 1700000000, "user_ts": 1699999999},
+    ]
+    assert split_nan(_to_wire(batch, compat_bytes=True)) == [
+        {"asset_code": b"a", "reading": {b"x": 1.5}},
+        {"asset_code": b"b", "reading": {b"u": b"C"},
+         "id": 2, "ts": -2, "user_ts": 1},
+        {"asset_code": b"c", "reading": {b"k": b"str"},
+         "id": 3, "ts": 1700000000, "user_ts": 1699999999},
+    ]
+    assert _to_wire(batch.slice(1, 1), compat_bytes=False) == [
+        {"asset_code": "b", "reading": {"u": "C"},
+         "id": 2, "ts": -2, "user_ts": 1},
+    ]
+    assert _to_wire(batch.slice(0, 0), compat_bytes=False) == []
+
+    empty = _from_wire([])
+    assert empty.num_rows == 0 and empty.schema == _WIRE_ARROW_SCHEMA
+    # the rebuilt batch keeps the NaN datapoint as NaN (the pandas codec
+    # turned it into a null map value on the way back)
+    back = _from_wire(_to_wire(batch, compat_bytes=False))
+    assert back.schema == _WIRE_ARROW_SCHEMA
+    assert math.isnan(dict(back.column("reading")[2].as_py())["n"])
 
 
 def test_set_filter_config_must_return_true(spark):
@@ -269,9 +335,9 @@ def test_default_timestamp_is_utc_regardless_of_host_tz():
     os.environ["TZ"] = "America/New_York"  # UTC-5/-4 — offset never 0
     time.tzset()
     try:
-        df = _from_wire([{"asset_code": "a", "reading": {"v": 1.0}}])
-        stamped = df["ts"].iloc[0].to_pydatetime()
-        now_utc = dt.datetime.now(tz=dt.timezone.utc).replace(tzinfo=None)
+        batch = _from_wire([{"asset_code": "a", "reading": {"v": 1.0}}])
+        stamped = batch.column("ts")[0].as_py()
+        now_utc = dt.datetime.now(tz=dt.timezone.utc)
         assert abs((stamped - now_utc).total_seconds()) < 60
     finally:
         if old_tz is None:
@@ -282,7 +348,7 @@ def test_default_timestamp_is_utc_regardless_of_host_tz():
 
 
 def test_small_input_skips_spreading_shuffle(spark, monkeypatch, tmp_path):
-    """The pre-mapInPandas repartition is gated on the optimizer's size
+    """The pre-mapInArrow repartition is gated on the optimizer's size
     estimate: below a few Arrow batches the shuffle's fixed cost exceeds
     what it saves (the r4 driver bench measured the 100k-row probe
     regressing under load), so a small input must keep its partitioning.

@@ -92,6 +92,172 @@ def test_pipeline_error_falls_back_to_input(spark, events_stream_dir, tmp_path):
     assert sum(got) == 1000
 
 
+def _split_events_stream(spark, events_stream_dir, tmp_path, parts):
+    """The sf0.001 events cut into ``parts`` files, one per trigger:
+    returns the readings stream and ``{event_id: value}`` of the input."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(os.path.join(events_stream_dir, "part-0.parquet"))
+    d = tmp_path / f"split{parts}"
+    d.mkdir()
+    step = -(-events.num_rows // parts)
+    for i in range(parts):
+        pq.write_table(
+            events.slice(i * step, step), str(d / f"part-{i}.parquet")
+        )
+    raw_schema = spark.read.parquet(str(d)).schema
+    ev = (
+        spark.readStream.schema(raw_schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(d))
+    )
+    raw = dict(
+        zip(
+            events.column("event_id").to_pylist(),
+            events.column("value").to_pylist(),
+        )
+    )
+    return events_to_readings(fix_event_ts(ev)), raw
+
+
+def test_lazy_transform_error_falls_back_inside_sink(
+    spark, events_stream_dir, tmp_path, caplog
+):
+    """S3 for an error raised lazily, inside the sink's own write: the
+    snapshot table holds every input row exactly once, unfiltered, and
+    each failed epoch logs exactly one WARNING."""
+    import logging
+
+    from foglamp_filter_python35_spark.sources import snapshot_table as st
+
+    readings, raw = _split_events_stream(spark, events_stream_dir, tmp_path, 2)
+
+    def lazy_boom(df, cfg):
+        # builds fine; fails only when a task evaluates it
+        return df.withColumn(
+            "asset_code",
+            F.raise_error(F.concat(F.lit("bad row "), F.col("asset_code")))
+            .cast("string"),
+        )
+
+    stages = [Stage("lazy_boom", lazy_boom, FilterConfig("lazy_boom", enable=True))]
+    table = str(tmp_path / "lazy_tbl")
+    caplog.set_level(
+        logging.WARNING, logger="foglamp_filter_python35_spark.streaming.pipeline"
+    )
+    q = run_micro_batch_pipeline(
+        readings,
+        stages,
+        sink=st.snapshot_sink(table, query_name="lazy"),
+        checkpoint_dir=str(tmp_path / "ckpt_lazy"),
+        query_name="lazy",
+    )
+    _run_to_completion(q)
+    epochs = [p.batchId for p in q.recentProgress if p.numInputRows > 0]
+    assert len(epochs) == 2
+
+    rows = st.read_snapshot(spark, table).collect()
+    assert sorted(r["id"] for r in rows) == sorted(raw)  # each row once
+    for r in rows:  # forwarded as they came in
+        assert r["reading"]["value"] == pytest.approx(raw[r["id"]])
+        assert not r["asset_code"].startswith("bad row")
+
+    records = [
+        r for r in caplog.records
+        if r.name == "foglamp_filter_python35_spark.streaming.pipeline"
+    ]
+    assert len(records) == len(epochs)
+    for rec, epoch in zip(records, epochs):
+        assert rec.levelno == logging.WARNING
+        msg = rec.getMessage()
+        assert f"epoch {epoch} " in msg and "'lazy'" in msg
+        assert "bad row" in msg
+
+
+def test_failing_sink_fails_query_without_forwarding(
+    spark, events_stream_dir, tmp_path, monkeypatch
+):
+    """A sink that raises while the transform is sound fails the query:
+    the sink is called once (no S3 retry with unfiltered input) and,
+    the snapshot sink being all-or-nothing, no version is committed."""
+    from pyspark.errors import StreamingQueryException
+
+    from foglamp_filter_python35_spark.sources import snapshot_table as st
+
+    def manifest_store_down(*args, **kwargs):
+        raise OSError("manifest store down")
+
+    # the data files get written; the manifest link that would publish
+    # them fails
+    monkeypatch.setattr(st, "_publish", manifest_store_down)
+    commit = st.snapshot_sink(str(tmp_path / "fail_tbl"), query_name="fail")
+    calls = []
+
+    def sink(df, epoch_id):
+        calls.append(epoch_id)
+        commit(df, epoch_id)
+
+    readings = _readings_stream(spark, events_stream_dir)
+    stages = [
+        REGISTRY.stage(
+            "scale",
+            FilterConfig("scale", enable=True, params={"scale": 5, "offset": 10}),
+        )
+    ]
+    q = run_micro_batch_pipeline(
+        readings, stages, sink, checkpoint_dir=str(tmp_path / "ckpt_fail")
+    )
+    with pytest.raises(StreamingQueryException, match="manifest store down"):
+        q.processAllAvailable()
+    q.stop()
+    assert calls == [0]
+    assert st.current_version(str(tmp_path / "fail_tbl")) is None
+
+
+def test_t9_into_snapshot_sink_runs_one_job_per_trigger(
+    spark, events_stream_dir, tmp_path
+):
+    """The sink's write is the only Spark job of a micro-batch: the T9
+    filter runs inside it, with no separate forcing job."""
+    from foglamp_filter_python35_spark.operators.python_filter import (
+        run_python_filter,
+    )
+    from foglamp_filter_python35_spark.sources import snapshot_table as st
+
+    def add1(readings):
+        for r in readings:
+            r["reading"] = {
+                k: v + 1 if isinstance(v, float) else v
+                for k, v in r["reading"].items()
+            }
+        return readings
+
+    readings, raw = _split_events_stream(spark, events_stream_dir, tmp_path, 3)
+    stages = [
+        Stage(
+            "t9",
+            lambda df, cfg: run_python_filter(df, add1, cfg),
+            FilterConfig("t9", enable=True),
+        )
+    ]
+    table = str(tmp_path / "jobs_tbl")
+    q = run_micro_batch_pipeline(
+        readings,
+        stages,
+        sink=st.snapshot_sink(table, query_name="jobs"),
+        checkpoint_dir=str(tmp_path / "ckpt_jobs"),
+    )
+    _run_to_completion(q)
+    triggers = [p for p in q.recentProgress if p.numInputRows > 0]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(triggers) == 3
+    assert len(jobs) == len(triggers)
+    rows = st.read_snapshot(spark, table).collect()
+    assert len(rows) == len(raw)
+    for r in rows[:50]:
+        assert r["reading"]["value"] == pytest.approx(raw[r["id"]] + 1)
+
+
 def test_disabled_stage_is_passthrough(spark, events_stream_dir, tmp_path):
     readings = _readings_stream(spark, events_stream_dir)
     stages = [

@@ -6,8 +6,9 @@ bans (SCALE.md "Python-boundary rules", VERDICT grep audits):
 
 - ``BatchEvalPython`` — a row-at-a-time Python UDF in the plan.  HARD
   FAIL: every Python hop must be Arrow-batched (mapInPandas /
-  applyInPandas(WithState) → ``MapInPandas``/``FlatMapGroupsInPandas``
-  nodes, which are allowed and counted separately).
+  mapInArrow / applyInPandas(WithState) → ``MapInPandas``/
+  ``MapInArrow``/``FlatMapGroupsInPandas`` nodes, which are allowed and
+  counted separately).
 - ``CartesianProduct`` — a non-broadcast cartesian join.  HARD FAIL:
   every deliberate cross join in the catalog broadcasts a one-row or
   centroid-sized frame (→ ``BroadcastNestedLoopJoin``, allowed and
@@ -72,6 +73,7 @@ COUNTED = (
     "BroadcastHashJoin",
     "BroadcastNestedLoopJoin",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandas",
 )
 
@@ -222,7 +224,7 @@ def main() -> int:
             f"{c['BroadcastExchange']} broadcasts, "
             f"SMJ={c['SortMergeJoin']} BHJ={c['BroadcastHashJoin']} "
             f"BNLJ={c['BroadcastNestedLoopJoin']} "
-            f"arrowPy={c['MapInPandas'] + c['FlatMapGroupsInPandas']}"
+            f"arrowPy={c['MapInPandas'] + c['MapInArrow'] + c['FlatMapGroupsInPandas']}"
         )
     if allowed_hits:
         print("\nallowlisted full-width scans (by operator contract):")
