@@ -203,9 +203,9 @@ def run_python_filter(
                 out = _from_wire(fn(_to_wire(batch, compat_bytes)))
             except Exception:
                 # any failure => forward the input batch unmodified
-                # (plugin.cpp:295-310, :338-342); the projection below
-                # makes it match the declared schema column for column
-                yield batch
+                # (plugin.cpp:295-310, :338-342), in the same Arrow schema
+                # as the rebuilt batches of this task
+                yield _as_declared(batch)
                 continue
             yield out
 
@@ -220,6 +220,20 @@ def run_python_filter(
 #: builds (timestamps as UTC epoch micros, which the JVM reads back
 #: whatever the session time zone).
 _WIRE_ARROW_SCHEMA = to_arrow_schema(READING_SCHEMA)
+
+
+def _as_declared(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """``batch`` cast to ``_WIRE_ARROW_SCHEMA``.  PySpark writes a task's
+    output through one Arrow stream opened on its first batch's schema,
+    so a forwarded input batch must match the batches ``_from_wire``
+    builds; Spark's input can differ in nullability (``ts`` from
+    ``current_timestamp()`` is non-nullable), in the session time zone
+    of its timestamps and in large string types.  Every cast is
+    value-preserving."""
+    return pa.RecordBatch.from_arrays(
+        [col.cast(f.type) for col, f in zip(batch.columns, _WIRE_ARROW_SCHEMA)],
+        schema=_WIRE_ARROW_SCHEMA,
+    )
 
 
 def _values(arr: pa.Array) -> tuple[list, list | None]:
@@ -331,9 +345,6 @@ def _from_wire(result: Wire) -> pa.RecordBatch:
         num: dict[str, float] = {}
         strs: dict[str, str] = {}
         for k, v in payload.items():
-            if type(k) is str and type(v) is float:  # the common datapoint
-                num[k] = v
-                continue
             key = k.decode() if isinstance(k, bytes) else k
             if not isinstance(key, str):
                 raise BatchReject(f"datapoint key {key!r} is not a string")

@@ -423,3 +423,72 @@ def test_estimated_bytes_fallback_is_narrow():
     assert pf._estimated_bytes(_GatewayDown()) == 1 << 62
     with pytest.raises(ValueError, match="must surface"):
         pf._estimated_bytes(_AnalysisBoom())
+
+
+def test_mixed_reject_and_accept_in_one_task(spark, tmp_path):
+    """One task, three Arrow batches, the filter raising on the middle one
+    only: the fallback batch and the rebuilt batches must share one Arrow
+    schema, or PySpark's stream writer (opened on the first batch's
+    schema) fails the task.  ``events_to_readings`` makes ``ts``
+    non-nullable, unlike the declared readings schema, so the forwarded
+    input has to be brought to the declared schema first."""
+    from foglamp_filter_python35_spark.datamodel import events_to_readings
+
+    path = str(tmp_path / "events")
+    spark.createDataFrame(
+        [(i, "lab1", T0, float(i), '{"k": 1}', i % 3) for i in range(30)],
+        "event_id long, event_type string, ts timestamp, value double, "
+        "props string, user_id long",
+    ).coalesce(1).write.parquet(path)
+    df = events_to_readings(spark.read.parquet(path)).coalesce(1)
+
+    def double_or_raise(readings):
+        if readings[0]["id"] == 10:
+            raise RuntimeError("second batch only")
+        for r in readings:
+            r["reading"] = {k: v * 2 for k, v in r["reading"].items()}
+        return readings
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10")
+    try:
+        out = run_python_filter(
+            df, double_or_raise, FilterConfig(enable=True)
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+    got = {r["id"]: r["reading"]["value"] for r in out}
+    assert sorted(got) == list(range(30))
+    assert all(got[i] == (i if 10 <= i < 20 else 2 * i) for i in got)
+
+
+def test_forwarded_batch_takes_the_declared_arrow_schema():
+    """The other input shapes Spark can send: timestamps in a non-UTC
+    session time zone and large string types.  The forwarded batch keeps
+    its values and takes the schema ``_from_wire`` builds."""
+    import pyarrow as pa
+
+    from foglamp_filter_python35_spark.operators.python_filter import (
+        _WIRE_ARROW_SCHEMA,
+        _as_declared,
+    )
+
+    la = pa.timestamp("us", "America/Los_Angeles")
+    big = pa.large_string()
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([1, None], pa.int64()),
+            pa.array(["a", "b"], big),
+            pa.array([-1_500_000, 7], la),
+            pa.array([None, 8], la),
+            pa.array([[("x", 1.5)], None], pa.map_(big, pa.float64())),
+            pa.array([[], [("u", None)]], pa.map_(big, big)),
+        ],
+        names=[f.name for f in _WIRE_ARROW_SCHEMA],
+    )
+    out = _as_declared(batch)
+    assert out.schema.equals(_WIRE_ARROW_SCHEMA)
+    assert out.column("ts").cast(pa.int64()).to_pylist() == [-1_500_000, 7]
+    assert out.to_pylist()[1]["reading_str"] == [("u", None)]
+    assert [r["asset_code"] for r in out.to_pylist()] == ["a", "b"]
